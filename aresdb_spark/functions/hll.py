@@ -5,8 +5,12 @@ sparse/dense binary sketches (query/hll.go, query/hll.cu, binary format
 query/common/hll.go:43-68).
 
 Capability parity on Spark:
-  - query-time approx distinct → approx_count_distinct (HLL++ built-in;
-    rsd 0.0065 ≈ 1.04/√2^14 matches the reference's register count)
+  - query-time approx distinct → approx_count_distinct (HLL++ built-in).
+    The AQL planner compiles ``hll()``/``countdistincthll()`` to
+    ``approx_count_distinct`` with Spark's default rsd 0.05
+    (aql/planner.py). ``approx_distinct`` below defaults to
+    ``HLL_PRECISION_RSD`` = 1.04/√2^14 ≈ 0.0081, the error of the
+    reference's 2^14 registers, for callers that want that precision.
   - *mergeable, persistable* sketches (the reason the reference has a
     binary format: brokers merge datanode sketches; dashboards merge
     day-sketches) → hll_sketch_agg / hll_sketch_estimate / hll_union

@@ -33,10 +33,12 @@ Spark shape: two parquet layouts behind one pointer.
     parquet dir and never touches the base — the reference's live store
     likewise APPENDS batches and resolves rows through the cuckoo PK
     index (memstore/live_store.go:33-46) instead of rewriting. Readers
-    resolve PK state with one fold over (base + pending batches) —
-    bounded, because the archive job compacts the pending set into a
-    new base on its cadence (memstore/archiving.go:62-72 merges live
-    batches into the archive the same way).
+    scan every pending batch dir as ONE parquet relation (batch order
+    from each file's ``batch=<K>`` dir) and resolve PK state with one
+    fold over (base + pending batches) — bounded, because the archive
+    job compacts the pending set into a new base on its cadence
+    (memstore/archiving.go:62-72 merges live batches into the archive
+    the same way).
   - the union view applies the cutoff predicate to both sides.
 
 On a Delta/Iceberg deployment hot-rewrite becomes MERGE and archive
@@ -71,7 +73,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aresdb_spark.sources import pointer
-from aresdb_spark.streaming.upsert import UpdateMode, apply_upsert_batch
+from aresdb_spark.streaming.upsert import (BATCH_COL, UpdateMode,
+                                           apply_upsert_batch)
+from aresdb_spark.streaming.upsert_wire import arrow_frame
 
 
 def _utc_naive(dt: datetime) -> datetime:
@@ -523,16 +527,21 @@ class HotColdStore:
         """The LOGICAL hot store: compacted base + committed pending
         batch dirs resolved to one row per PK. With no pending batches
         (steady state right after archive/init) this is a plain scan of
-        the base. With pending batches and store-default modes, the
-        resolution is ONE fold aggregation (fold_upserts — a single
-        hash shuffle regardless of how many batches are pending) whose
-        input is ONLY the base rows a pending PK touches: the pending-PK
-        set broadcasts (left_semi/left_anti split of the base), and the
-        untouched slice unions back without shuffling — resolve cost
-        tracks |pending|, not |hot base|. A batch ingested with override
-        modes forces the exact iterative replay instead (one merge join
-        per such chain — bounded by the archiving cadence, and only
-        ever paid by callers that use per-batch mode overrides)."""
+        the base. Otherwise every pending dir is read through ONE
+        parquet relation (``_pending_scan``): batch order is each
+        file's own ``batch=<N>`` directory, so nothing on the read path
+        grows by a DataFrame per pending batch. With store-default
+        modes the resolution is ONE fold aggregation (fold_upserts — a
+        single hash shuffle regardless of how many batches are
+        pending) whose input is ONLY the base rows a pending PK
+        touches: the pending-PK set broadcasts (left_semi/left_anti
+        split of the base), and the untouched slice unions back without
+        shuffling — resolve cost tracks |pending|, not |hot base|. A
+        batch ingested with override modes forces the exact iterative
+        replay instead (one merge join per pending batch, each a
+        filter of the same scan — bounded by the archiving cadence, and
+        only ever paid by callers that use per-batch mode
+        overrides)."""
         from aresdb_spark.streaming.upsert import fold_upserts
 
         schema = self._schema(st)
@@ -541,11 +550,7 @@ class HotColdStore:
         pend = self._pending_hot_batches(st)
         if not pend:
             return base
-        from pyspark.sql.types import LongType, StructField, StructType
-        batch_schema = StructType(
-            list(schema.fields) + [StructField("__seq", LongType())])
-        batches = [spark.read.schema(batch_schema).parquet(
-            self._hot_batch_dir(e["n"])) for e in pend]
+        pending = self._pending_scan(spark, schema, pend)
         pk = list(self.primary_key)
         if not any("modes" in e for e in pend):
             # Fold ONLY the base rows whose PK a pending batch touches
@@ -566,26 +571,42 @@ class HotColdStore:
             # it, and an oversized set takes the whole-base fold that
             # r9 always paid.
             if self._pending_rows(pend) <= self.hot_probe_max_rows:
-                probe = batches[0].select(*pk)
-                for b in batches[1:]:
-                    probe = probe.unionByName(b.select(*pk))
                 cond = None
                 for k in pk:  # null-safe: NULL PK is a legal single key
                     c = F.col(f"b.{k}").eqNullSafe(F.col(f"p.{k}"))
                     cond = c if cond is None else cond & c
                 bb = base.alias("b")
-                pp = F.broadcast(probe.alias("p"))
+                pp = F.broadcast(pending.select(*pk).alias("p"))
                 matched = bb.join(pp, cond, "left_semi")
                 untouched = bb.join(pp, cond, "left_anti")
-                folded = fold_upserts(matched, batches, pk, self.modes)
+                folded = fold_upserts(matched, pending, pk, self.modes)
                 return self._conform(folded, st).unionByName(untouched)
             return self._conform(
-                fold_upserts(base, batches, pk, self.modes), st)
+                fold_upserts(base, pending, pk, self.modes), st)
         resolved = base
-        for e, b in zip(pend, batches):
+        for e in pend:
+            batch = pending.filter(F.col(BATCH_COL) == e["n"])
             resolved = apply_upsert_batch(
-                resolved, b, pk, e.get("modes", self.modes), "__seq")
+                resolved, batch.drop(BATCH_COL), pk,
+                e.get("modes", self.modes), "__seq")
         return self._conform(resolved, st)
+
+    def _pending_scan(self, spark: SparkSession, schema,
+                      pend: list[dict]) -> DataFrame:
+        """Every committed pending hot batch in ONE parquet relation:
+        the store columns, the persisted ``__seq`` and ``__batch`` — the
+        batch number parsed from the ``batch=<N>`` directory that holds
+        each file (numeric; anchored to the file's parent dir, so a
+        ``batch=`` elsewhere in the store root never matches)."""
+        from pyspark.sql.types import LongType, StructField, StructType
+        batch_schema = StructType(
+            list(schema.fields) + [StructField("__seq", LongType())])
+        scan = spark.read.schema(batch_schema).parquet(
+            *[self._hot_batch_dir(e["n"]) for e in pend])
+        batch_no = F.regexp_extract(
+            F.col("_metadata.file_path"), r"/batch=([0-9]+)/[^/]*$", 1)
+        return scan.select(*batch_schema.fieldNames(),
+                           batch_no.cast("long").alias(BATCH_COL))
 
     def read_cold(self, spark: SparkSession,
                   time_range: "tuple | None" = None) -> DataFrame:
@@ -624,7 +645,9 @@ class HotColdStore:
                 keys = [d for d in keys if d <= last]
         dirs = [os.path.join(self.path, rel) for d in keys for rel in m[d]]
         if not dirs:
-            return spark.createDataFrame([], schema)
+            # an empty LocalRelation, not an RDD: Catalyst sees the
+            # branch is empty and prunes it from the union view
+            return arrow_frame(spark, schema, [[] for _ in schema.fields])
         return spark.read.schema(schema).parquet(*dirs).select(*cols)
 
     def read(self, spark: SparkSession,
@@ -1472,7 +1495,7 @@ class DimensionStore:
         before the snapshot job's threshold. Journal replay always uses
         the STORE's modes (per-batch overrides take the eager
         ``ingest``), so the one-pass fold is always applicable."""
-        from aresdb_spark.streaming.upsert import fold_upserts
+        from aresdb_spark.streaming.upsert import fold_upserts, tag_batches
 
         names = self._journal_batches(st)
         if not names:
@@ -1480,8 +1503,8 @@ class DimensionStore:
         sch = self._schema(st)
         batches = [self._read_journal_batch(spark, sch, name)
                    for name in names]
-        folded = fold_upserts(base, batches, list(self.primary_key),
-                              self.modes)
+        folded = fold_upserts(base, tag_batches(batches),
+                              list(self.primary_key), self.modes)
         # conform: fold aggregates can widen dtypes (sum-based add)
         return folded.select(
             [F.col(f.name).cast(f.dataType) for f in sch.fields])

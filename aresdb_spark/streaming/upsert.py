@@ -129,18 +129,40 @@ def apply_upsert_batch(base: DataFrame, batch: DataFrame, pk_cols: list[str],
     return joined.select(*out_cols)
 
 
-def fold_upserts(base: DataFrame, batches: list[DataFrame], pk_cols: list[str],
+# the batch-order column of fold_upserts' input
+BATCH_COL = "__batch"
+
+
+def tag_batches(batches: list[DataFrame]) -> DataFrame:
+    """One frame holding an arrival-ordered list of upsert batches, each
+    row tagged with its batch's list position in ``BATCH_COL`` — the
+    input shape ``fold_upserts`` takes. For callers that hold batches as
+    separate frames (journal replay, tests); a store that can read every
+    pending batch in one scan derives the order column from the scan
+    instead."""
+    tagged = [b.withColumn(BATCH_COL, F.lit(i))
+              for i, b in enumerate(batches)]
+    out = tagged[0]
+    for b in tagged[1:]:
+        out = out.unionByName(b)
+    return out
+
+
+def fold_upserts(base: DataFrame, batches: DataFrame, pk_cols: list[str],
                  modes: dict[str, UpdateMode | str] | None = None,
                  seq_col: str = "__seq") -> DataFrame:
-    """Resolve ``base`` + an ordered list of upsert batches to one row
-    per PK in a SINGLE aggregation — the read-side of the append-only
-    hot store (the reference resolves its appended live batches through
-    the cuckoo PK index at read, memstore/live_store.go:33-46; here the
-    bounded hot set folds in one hash shuffle instead).
+    """Resolve ``base`` + upsert batches to one row per PK in a SINGLE
+    aggregation — the read-side of the append-only hot store (the
+    reference resolves its appended live batches through the cuckoo PK
+    index at read, memstore/live_store.go:33-46; here the bounded hot
+    set folds in one hash shuffle instead).
 
-    Each batch must carry ``seq_col`` (long, intra-batch arrival order —
-    materialized at ingest write time); batches are ordered by list
-    position. Equivalent to chaining ``apply_upsert_batch`` per batch
+    ``batches`` is ONE frame holding every pending batch's rows. Arrival
+    order is ``(BATCH_COL, seq_col)``: ``BATCH_COL`` (a non-negative
+    integer) orders the batches, ``seq_col`` (long, intra-batch arrival
+    order materialized at ingest write time) orders rows within one.
+    ``tag_batches`` builds that frame from a list. Equivalent to
+    chaining ``apply_upsert_batch`` per batch in ``BATCH_COL`` order
     because every mode's merge is associative over arrival order:
 
       - overwrite: last non-null in (batch, seq) order  → max_by
@@ -152,16 +174,11 @@ def fold_upserts(base: DataFrame, batches: list[DataFrame], pk_cols: list[str],
     batch row. One shuffle total, independent of the number of pending
     batches (vs. one join per batch for the iterative chain)."""
     cols = base.columns
-    parts = [base.select(
-        *cols, F.lit(-1).alias("__fold_b"),
-        F.lit(0).cast("long").alias(seq_col))]
-    for i, b in enumerate(batches):
-        parts.append(b.select(
-            *cols, F.lit(i).alias("__fold_b"), F.col(seq_col)))
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    order = F.struct(F.col("__fold_b"), F.col(seq_col))
+    u = base.select(
+        *cols, F.lit(-1).alias(BATCH_COL),
+        F.lit(0).cast("long").alias(seq_col)).unionByName(
+            batches.select(*cols, BATCH_COL, seq_col))
+    order = F.struct(F.col(BATCH_COL), F.col(seq_col))
     aggs: list[Column] = []
     for c in cols:
         if c in pk_cols:

@@ -747,7 +747,16 @@ def upsert_batch_to_df(spark, buffer: "bytes | UpsertBatch",
     schema lookup server-side), and each column's wire update mode maps
     to its UpdateMode name. Unknown column ids error like the reference's
     ingestion path. An already-parsed ``UpsertBatch`` is accepted so
-    callers that need batch metadata don't parse twice."""
+    callers that need batch metadata don't parse twice.
+
+    The frame is built column by column as a ``pyarrow.Table`` in the
+    Arrow form of the Spark schema, so Spark plans it as a
+    ``LocalRelation``: every job over the batch (the hot append, the
+    backfill enqueue) runs in the JVM with no Python worker, and
+    Catalyst can fold projections into the local rows. Row order is
+    the wire order (the hot append derives ``__seq`` from it). A value
+    Arrow cannot hold in its column type raises ``ValueError``."""
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     batch = buffer if isinstance(buffer, UpsertBatch) \
@@ -766,9 +775,39 @@ def upsert_batch_to_df(spark, buffer: "bytes | UpsertBatch",
         fields.append(T.StructField(
             name, T._parse_datatype_string(_spark_type(c.type_name))))
 
-    rows = [tuple(_wire_to_bridge(c.type_name, c.values[r]) for c in keep)
-            for r in range(len(keep[0].values) if keep else 0)]
-    return spark.createDataFrame(rows, T.StructType(fields)), modes
+    schema = T.StructType(fields)
+    try:
+        df = arrow_frame(spark, schema, [_bridge_column(c) for c in keep])
+    except (pa.ArrowTypeError, pa.ArrowInvalid, OverflowError) as e:
+        raise ValueError(f"upsert batch does not convert to "
+                         f"{schema.simpleString()}: {e}") from e
+    return df, modes
+
+
+def arrow_frame(spark, schema, columns: list[list]):
+    """A DataFrame of ``schema`` from one value list per field, built as
+    a ``pyarrow.Table`` so Spark plans it as a ``LocalRelation`` (an
+    empty one when the lists are empty, which the optimizer prunes from
+    unions) — never the pickled Python RDD that
+    ``spark.createDataFrame(rows, schema)`` makes, whose every job runs
+    Python worker tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(vals, type=f.type)
+         for vals, f in zip(columns, arrow_schema)],
+        schema=arrow_schema), schema)
+
+
+def _bridge_column(c: UpsertColumn) -> list:
+    """One parsed column's values in their bridge form; the fixed-width
+    scalars need no per-value conversion."""
+    if c.type_name in ("UUID", "GeoPoint", "GeoShape") or \
+            c.type_name.endswith("[]"):
+        return [_wire_to_bridge(c.type_name, v) for v in c.values]
+    return c.values
 
 
 def encode_upsert_batch_stream(df, schema_doc: dict, arrival_time: int,
@@ -906,14 +945,10 @@ def decode_upsert_batch_stream(raw, schema_doc: dict,
                     c = cols_by_id.get(id_by_name[n])
                     if c is None:
                         out[n].extend([None] * ub.num_rows)
-                    elif c.type_name in ("UUID", "GeoPoint", "GeoShape") \
-                            or c.type_name.endswith("[]"):
+                    else:
                         # bridge conversion: the output schema is
                         # string/array-typed, never raw tuples
-                        out[n].extend(_wire_to_bridge(c.type_name, v)
-                                      for v in c.values)
-                    else:
-                        out[n].extend(c.values)
+                        out[n].extend(_bridge_column(c))
             yield pd.DataFrame(out, columns=names)
 
     return raw.mapInPandas(decode, schema=out_schema)

@@ -7,8 +7,10 @@ its executed physical plan WITHOUT collecting results:
   - CartesianProduct / BroadcastNestedLoopJoin with an inner join
     and no condition                                      -> VIOLATION
   - per-plan counts of Exchange / BroadcastHashJoin / SortMergeJoin /
-    ArrowEvalPython / FlatMapGroupsInPandas / MapInPandas — recorded
-    so cross-round diffs of this artifact surface silent plan drift
+    ArrowEvalPython / FlatMapGroupsInPandas / MapInPandas /
+    ExistingRDD / LogicalRDD — recorded so cross-round diffs of this
+    artifact surface silent plan drift (an RDD scan is a Python-local
+    relation: Python worker tasks and no optimizer visibility)
 
 Rows whose builders RUN jobs at build time (streaming sinks, store
 lifecycle setups) still yield a final batch DataFrame; its plan is
@@ -31,7 +33,7 @@ OUT = sys.argv[2] if len(sys.argv) > 2 else None
 NODES = ["Exchange", "BroadcastHashJoin", "SortMergeJoin",
          "BroadcastNestedLoopJoin", "CartesianProduct",
          "BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
-         "MapInPandas", "WholeStageCodegen"]
+         "MapInPandas", "WholeStageCodegen", "ExistingRDD", "LogicalRDD"]
 
 
 def main() -> int:

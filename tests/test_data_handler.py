@@ -366,3 +366,19 @@ def test_post_data_dimension_routes_to_journal(spark, tmp_path):
     assert got == [(1, 100), (2, 200)]
     assert dim.snapshot(spark) == 1               # compaction folds it
     assert sorted(tuple(r) for r in dim.read(spark).collect()) == got
+
+
+def test_post_data_unconvertible_batch_is_400(spark, tmp_path, monkeypatch):
+    """A decoded batch whose values do not fit the Arrow column types
+    answers 400 instead of raising out of ``post_data``."""
+    from aresdb_spark.streaming import data_handler
+    from aresdb_spark.streaming.upsert_wire import (ALL_VALUES_PRESENT,
+                                                    UpsertBatch, UpsertColumn)
+
+    h = make_handler(spark, tmp_path)
+    bad = UpsertBatch(1, 10, [
+        UpsertColumn(0, "Uint32", ALL_VALUES_PRESENT, 0, [T0]),
+        UpsertColumn(1, "Int64", ALL_VALUES_PRESENT, 0, [2**70])])
+    monkeypatch.setattr(data_handler, "parse_upsert_batch", lambda b: bad)
+    status, body = h.post_data("trips", 0, b"ignored")
+    assert status == 400 and "does not convert" in body["message"]

@@ -549,3 +549,95 @@ def test_wire_batch_ingests_through_apply_upsert(spark):
     assert rows[1]["fare"] == pytest.approx(12.5)   # add mode accumulated
     assert rows[1]["request_at"] == 100             # overwrite mode
     assert rows[2]["fare"] == pytest.approx(4.0)    # fresh insert
+
+
+# one non-null sample per wire type; arrays mix in a null element
+BRIDGE_SAMPLES = {
+    "Bool": True, "Int8": -7, "Uint8": 250, "Int16": -30000,
+    "Uint16": 65000, "Int32": -2**31, "Uint32": 2**32 - 1,
+    "Float32": 1.5, "SmallEnum": 3, "BigEnum": 300,
+    "UUID": (0x0123456789ABCDEF, 0xFEDCBA9876543210),
+    "GeoPoint": (37.7749, -122.4194),
+    "GeoShape": "POLYGON((-122.4 37.7, -122.5 37.8, -122.4 37.7))",
+    "Int64": -2**63,
+}
+
+
+def _rows_path_df(spark, buffer, schema_doc):
+    """The former bridge: Python row tuples through
+    ``spark.createDataFrame(rows, schema)`` — the differential reference
+    for the Arrow-built frame."""
+    from pyspark.sql import types as T
+
+    from aresdb_spark.streaming.upsert_wire import _spark_type, _wire_to_bridge
+
+    ub = parse_upsert_batch(buffer)
+    cols = sorted(ub.columns, key=lambda c: c.column_id)
+    schema = T.StructType([
+        T.StructField(schema_doc["columns"][c.column_id]["name"],
+                      T._parse_datatype_string(_spark_type(c.type_name)))
+        for c in cols])
+    rows = [tuple(_wire_to_bridge(c.type_name, c.values[r]) for c in cols)
+            for r in range(ub.num_rows)]
+    return spark.createDataFrame(rows, schema)
+
+
+def test_arrow_bridge_matches_rows_path_for_every_wire_type(spark):
+    """Every scalar and array wire type, with null cells and null array
+    items: the Arrow-built frame has the rows path's schema and rows
+    (in order), and plans as a LocalRelation — no Python RDD."""
+    types = sorted(DATA_TYPES)
+    doc = {"name": "all", "columns": [
+        {"name": f"c{i}", "type": t} for i, t in enumerate(types)]}
+    b = UpsertBatchBuilder(arrival_time=10)
+    for i, t in enumerate(types):
+        b.add_column(i, t)
+    for r in range(4):
+        b.add_row()
+    for i, t in enumerate(types):
+        item = BRIDGE_SAMPLES[t.rstrip("[]")]
+        if t.endswith("[]"):
+            b.set_value(0, i, [item, None, item])
+            b.set_value(1, i, [])
+            b.set_value(3, i, [None])
+        else:
+            b.set_value(0, i, item)
+            b.set_value(3, i, item)
+        # row 2 is null in every column
+    buf = b.to_byte_array()
+
+    df, modes = upsert_batch_to_df(spark, buf, doc)
+    ref = _rows_path_df(spark, buf, doc)
+    assert df.schema == ref.schema
+    got = df.collect()
+    assert got == ref.collect()
+    assert set(modes.values()) == {"overwrite"}
+    assert got[0]["c" + str(types.index("UUID"))] == \
+        "01234567-89ab-cdef-fedc-ba9876543210"
+    assert all(v is None for v in got[2])
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+@pytest.mark.parametrize("type_name,bad", [
+    ("Int8", 300),        # pyarrow ArrowInvalid: out of range
+    ("Int64", 2**70),     # OverflowError
+    ("UUID", 1),          # pyarrow ArrowTypeError: int for a string
+])
+def test_arrow_bridge_conversion_errors_are_value_errors(
+        spark, monkeypatch, type_name, bad):
+    """A value Arrow cannot hold in its column type surfaces as
+    ValueError (what ``post_data`` answers 400 for), whichever of
+    pyarrow's or Python's errors the conversion raised."""
+    from aresdb_spark.streaming import upsert_wire
+    from aresdb_spark.streaming.upsert_wire import UpsertBatch, UpsertColumn
+
+    # hand the raw value to Arrow unconverted (the parser never yields
+    # these; the mapping is the boundary's guarantee, not the parser's)
+    monkeypatch.setattr(upsert_wire, "_bridge_column", lambda c: c.values)
+    doc = {"name": "t", "columns": [{"name": "x", "type": type_name}]}
+    ub = UpsertBatch(1, 10, [UpsertColumn(0, type_name, ALL_VALUES_PRESENT,
+                                          0, [bad])])
+    with pytest.raises(ValueError, match="does not convert"):
+        upsert_batch_to_df(spark, ub, doc)
