@@ -28,17 +28,20 @@ Spark shape: two parquet layouts behind one pointer.
     prefilter-slice analog). Archive APPENDS day dirs; backfill
     rewrites only affected days; purge drops map entries — no cold
     mutation is ever O(|cold|).
-  - hot/ is a compacted base (``hot_v<N>``) plus APPEND-ONLY numbered
-    batch dirs (``hotbatch/batch=<K>``): ingest writes one O(batch)
-    parquet dir and never touches the base — the reference's live store
-    likewise APPENDS batches and resolves rows through the cuckoo PK
-    index (memstore/live_store.go:33-46) instead of rewriting. Readers
-    scan every pending batch dir as ONE parquet relation (batch order
-    from each file's ``batch=<K>`` dir) and resolve PK state with one
-    fold over (base + pending batches) — bounded, because the archive
-    job compacts the pending set into a new base on its cadence
-    (memstore/archiving.go:62-72 merges live batches into the archive
-    the same way).
+  - hot/ is a compacted base (``hot_v<N>``) plus the pending batches
+    of an APPEND-ONLY batch log (``hotbatch/``, sources/batchlog.py):
+    ingest writes one O(batch) parquet dir and never touches the base
+    — the reference's live store likewise APPENDS batches and resolves
+    rows through the cuckoo PK index (memstore/live_store.go:33-46)
+    instead of rewriting. Readers scan every pending batch as ONE
+    parquet relation and resolve PK state with one fold over (base +
+    pending batches) — bounded, because the archive job compacts the
+    pending set into a new base on its cadence (memstore/archiving.go:
+    62-72 merges live batches into the archive the same way).
+  - the deferred backfill queue (``backfill/``) and the dimension
+    store's mutation journal (``journal/``) are batch logs of the same
+    module: one numbering, one commit-gated visibility rule, one scan
+    and one fold for all three append-then-compact buffers.
   - the union view applies the cutoff predicate to both sides.
 
 On a Delta/Iceberg deployment hot-rewrite becomes MERGE and archive
@@ -51,14 +54,16 @@ mutation's metadata — live version numbers, queue-consumption
 watermarks, the archiving cutoff — in ONE small ``_state.json`` write
 (sources/pointer.py). The archive job's hot rewrite, cold rewrite and
 cutoff advance become visible together or not at all; a backfill flush's
-cold rewrite and queue truncation likewise. No data file is ever renamed
-or overwritten in place, so the layout needs only atomic small-object
-PUT from the filesystem — which object stores provide. Displaced version
-dirs and consumed queue dirs are garbage-collected best-effort AFTER the
-commit (a failed delete costs storage, never correctness). This is the
-reference's own publication order: vector-party files land first, then
-the disk metastore flips the batch version / snapshot pointer
-(metastore/disk_metastore.go, diskstore_util.go:66-70).
+cold rewrite and queue truncation likewise, and a batch-log append
+becomes visible only with the commit that ledgers it. No committed data
+file is ever renamed or overwritten in place, so the layout needs only
+atomic small-object PUT from the filesystem — which object stores
+provide. Displaced version dirs and consumed batch-log dirs are
+garbage-collected best-effort AFTER the commit (a failed delete costs
+storage, never correctness). This is the reference's own publication
+order: vector-party files land first, then the disk metastore flips the
+batch version / snapshot pointer (metastore/disk_metastore.go,
+diskstore_util.go:66-70).
 """
 
 from __future__ import annotations
@@ -73,8 +78,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aresdb_spark.sources import pointer
+from aresdb_spark.sources.batchlog import (SEQ_COL, BatchLog, arrival_seq,
+                                           footer_size)
 from aresdb_spark.streaming.upsert import (BATCH_COL, UpdateMode,
-                                           apply_upsert_batch)
+                                           apply_upsert_batch, fold_upserts)
 from aresdb_spark.streaming.upsert_wire import arrow_frame
 
 
@@ -131,15 +138,12 @@ def _utc_session(spark: SparkSession):
                 spark.conf.set("spark.sql.session.timeZone", ent[1])
 
 
-def _dir_has_column(d: str, col: str) -> bool:
-    """Whether the parquet files in ``d`` carry ``col`` — one pyarrow
-    footer read of the first file, no Spark session involvement (dirs
-    are written atomically by one code version, so one file decides)."""
-    import pyarrow.parquet as pq
-    for e in os.scandir(d):
-        if e.name.endswith(".parquet"):
-            return col in pq.ParquetFile(e.path).schema_arrow.names
-    return True
+# pending-set size (footer row count) above which the hot read skips
+# the pending-PK broadcast probe in favor of the whole-base fold — the
+# broadcast must never be the thing that OOMs a reader when a bulk
+# backload queues millions of rows before the first archive. Under the
+# normal archiving cadence the pending set is orders of magnitude below.
+HOT_PROBE_MAX_ROWS = 1_000_000
 
 
 class MissingEventTimeError(ValueError):
@@ -174,20 +178,6 @@ class HotColdStore:
     # skips them in createArchivingPatches (archiving.go:150-165, pinned
     # by the batch-120 golden in archiving_test.go:316-363).
     allow_missing_event_time: bool = False
-    # pending-set size (footer row count) above which the read-side
-    # pending-PK broadcast probe is skipped in favor of the whole-base
-    # fold — the broadcast must never be the thing that OOMs a reader
-    # when a bulk backload queues millions of rows before the first
-    # archive. Under the normal archiving cadence the pending set is
-    # orders of magnitude below this.
-    hot_probe_max_rows: int = 1_000_000
-    # file-count cap per appended hot batch dir: a micro-batch inherits
-    # its source's partitioning (a 32-way stream writing 1k-row batches
-    # would land 32 tiny files per batch — small-file explosion on the
-    # pending-set scan); the write coalesces to at most this many files
-    # while big batches keep up to this much write parallelism. The
-    # reference's analog is one live batch object per upsert batch.
-    hot_batch_max_files: int = 8
 
     def _state(self) -> "dict | None":
         return pointer.read_state(self.path)
@@ -228,42 +218,26 @@ class HotColdStore:
         return self._version_path("cold")
 
     @property
-    def backfill_path(self) -> str:
-        return os.path.join(self.path, "backfill")
+    def hot_log(self) -> BatchLog:
+        """The hot store's pending batches (``hotbatch/``) — ledgered
+        since they exist, so no listing fallback and no watermark."""
+        return BatchLog(self.path, "hotbatch", "hot_batches", "hot_seq")
 
     @property
-    def hot_batches_path(self) -> str:
-        return os.path.join(self.path, "hotbatch")
+    def backfill_log(self) -> BatchLog:
+        """The deferred backfill queue (``backfill/``): the reference's
+        BackfillManager buffer (backfill_manager.go:62-120)."""
+        return BatchLog(self.path, "backfill", "backfill_batches",
+                        "backfill_seq", "backfill_consumed")
 
-    def _pending_hot_batches(
-            self, st: "dict | None | str" = "__load__") -> list[dict]:
-        """Committed, not-yet-compacted hot batch records, in arrival
-        order: ``[{"n": <dir number>, "modes": {...}?}, ...]``. Resolved
-        from the pointer state, never a directory listing — a dir
-        written by a writer that died before its commit is invisible
-        (and reclaimed by number reuse on the next ingest)."""
-        if st == "__load__":
-            st = self._state()
-        return list((st or {}).get("hot_batches", []))
+    @property
+    def backfill_path(self) -> str:
+        return self.backfill_log.path
 
-    def _hot_batch_dir(self, n: int) -> str:
-        return os.path.join(self.hot_batches_path, f"batch={n}")
-
-    @staticmethod
-    def _dir_rows(d: str) -> int:
-        """Parquet footer row count of one dir — metadata only, no job."""
-        import pyarrow.parquet as pq
-        total = 0
-        if os.path.isdir(d):
-            for e in os.scandir(d):
-                if e.name.endswith(".parquet"):
-                    total += pq.ParquetFile(e.path).metadata.num_rows
-        return total
-
-    def _pending_rows(self, pend: list[dict]) -> int:
-        """Physical rows across the pending hot batch dirs (footers)."""
-        return sum(self._dir_rows(self._hot_batch_dir(e["n"]))
-                   for e in pend)
+    def _pending_hot_batches(self) -> list[dict]:
+        """Committed, not-yet-compacted hot batches in arrival order:
+        ``[{"n": <dir number>, "modes": {...}?}, ...]``."""
+        return self.hot_log.pending(self._state())
 
     # -- bootstrap -----------------------------------------------------------
 
@@ -273,10 +247,10 @@ class HotColdStore:
         DDL analog) so empty stores stay readable. Both sides land in
         FRESH version dirs and become visible with the state commit —
         re-initializing an existing store is a normal versioned
-        mutation, never an in-place overwrite of the live dirs, and any
-        leftover backfill queue dirs stay invisible behind an advanced
-        watermark (stale pre-reinit batches must not fold into the new
-        dataset on the next flush). The schema file is versioned like
+        mutation, never an in-place overwrite of the live dirs, and the
+        same commit consumes both batch logs (stale pre-reinit hot or
+        queued batches must not fold into the new dataset on the next
+        read or flush). The schema file is versioned like
         the data dirs (``_schema_v<N>.json``, referenced by the pointer
         commit) — an in-place overwrite would pair a NEW schema with the
         OLD committed dirs if the re-init crashed before its commit.
@@ -297,38 +271,22 @@ class HotColdStore:
             # NULL event times (when allowed) belong to hot — they
             # never archive
             self._write_hot(df.filter((t >= cut) | t.isNull()), hv)
-            consumed = int((before or {}).get("backfill_consumed", -1))
-            if os.path.isdir(self.backfill_path):
-                consumed = max([consumed] + [
-                    int(n.split("=")[1])
-                    for n in os.listdir(self.backfill_path)
-                    if n.startswith("batch=")])
-            # hot batch numbering likewise restarts ABOVE any dir on
-            # disk (committed or orphaned) so a stale batch dir can
-            # never collide with — or become visible under — a number
-            # the re-initialized store hands out again
-            hot_seq = int((before or {}).get("hot_seq", -1))
-            if os.path.isdir(self.hot_batches_path):
-                hot_seq = max([hot_seq] + [
-                    int(n.split("=")[1])
-                    for n in os.listdir(self.hot_batches_path)
-                    if n.startswith("batch=")])
-            displaced = []
+            # both batch logs are consumed: pending hot batches and
+            # queued backfill are stale against the new dataset
+            hot_upd, hot_dirs = self.hot_log.consume(before)
+            queue_upd, queue_dirs = self.backfill_log.consume(before)
+            displaced = hot_dirs + queue_dirs
             if os.path.exists(self._schema_path(before)):  # brand-new: none
                 displaced.append(
                     os.path.basename(self._schema_path(before)))
             if before is not None:
                 displaced += [self._displaced_dir("hot", before)]
                 displaced += self._cold_artifacts(before)
-            displaced += [f"hotbatch/batch={e['n']}"
-                          for e in self._pending_hot_batches(before)]
             self._commit(hot=hv, cold=None, schema=sv,
                          cold_days=day_map, coldset_seq=ck,
                          cold_day_stats=self._cold_stats_update(
                              None, day_map, written0),
-                         backfill_consumed=consumed,
-                         backfill_batches=[],
-                         hot_seq=hot_seq, hot_batches=[],
+                         **hot_upd, **queue_upd,
                          cutoff=_utc_naive(cutoff).isoformat(),
                          displaced=pointer.displace(before, displaced))
             pointer.gc_displaced(self.path)
@@ -528,7 +486,7 @@ class HotColdStore:
         batch dirs resolved to one row per PK. With no pending batches
         (steady state right after archive/init) this is a plain scan of
         the base. Otherwise every pending dir is read through ONE
-        parquet relation (``_pending_scan``): batch order is each
+        parquet relation (``BatchLog.scan``): batch order is each
         file's own ``batch=<N>`` directory, so nothing on the read path
         grows by a DataFrame per pending batch. With store-default
         modes the resolution is ONE fold aggregation (fold_upserts — a
@@ -542,15 +500,13 @@ class HotColdStore:
         filter of the same scan — bounded by the archiving cadence, and
         only ever paid by callers that use per-batch mode
         overrides)."""
-        from aresdb_spark.streaming.upsert import fold_upserts
-
         schema = self._schema(st)
         base = spark.read.schema(schema).parquet(
             self._version_path("hot", st))
-        pend = self._pending_hot_batches(st)
-        if not pend:
+        pending = self.hot_log.scan(spark, schema, st)
+        if pending is None:
             return base
-        pending = self._pending_scan(spark, schema, pend)
+        pend = self.hot_log.pending(st)
         pk = list(self.primary_key)
         if not any("modes" in e for e in pend):
             # Fold ONLY the base rows whose PK a pending batch touches
@@ -570,7 +526,7 @@ class HotColdStore:
             # the broadcast — parquet footers (metadata, no job) bound
             # it, and an oversized set takes the whole-base fold that
             # r9 always paid.
-            if self._pending_rows(pend) <= self.hot_probe_max_rows:
+            if self.hot_log.size(st)[0] <= HOT_PROBE_MAX_ROWS:
                 cond = None
                 for k in pk:  # null-safe: NULL PK is a legal single key
                     c = F.col(f"b.{k}").eqNullSafe(F.col(f"p.{k}"))
@@ -588,25 +544,8 @@ class HotColdStore:
             batch = pending.filter(F.col(BATCH_COL) == e["n"])
             resolved = apply_upsert_batch(
                 resolved, batch.drop(BATCH_COL), pk,
-                e.get("modes", self.modes), "__seq")
+                e.get("modes", self.modes), SEQ_COL)
         return self._conform(resolved, st)
-
-    def _pending_scan(self, spark: SparkSession, schema,
-                      pend: list[dict]) -> DataFrame:
-        """Every committed pending hot batch in ONE parquet relation:
-        the store columns, the persisted ``__seq`` and ``__batch`` — the
-        batch number parsed from the ``batch=<N>`` directory that holds
-        each file (numeric; anchored to the file's parent dir, so a
-        ``batch=`` elsewhere in the store root never matches)."""
-        from pyspark.sql.types import LongType, StructField, StructType
-        batch_schema = StructType(
-            list(schema.fields) + [StructField("__seq", LongType())])
-        scan = spark.read.schema(batch_schema).parquet(
-            *[self._hot_batch_dir(e["n"]) for e in pend])
-        batch_no = F.regexp_extract(
-            F.col("_metadata.file_path"), r"/batch=([0-9]+)/[^/]*$", 1)
-        return scan.select(*batch_schema.fieldNames(),
-                           batch_no.cast("long").alias(BATCH_COL))
 
     def read_cold(self, spark: SparkSession,
                   time_range: "tuple | None" = None) -> DataFrame:
@@ -718,8 +657,8 @@ class HotColdStore:
         row must not trigger an archive rewrite per batch.
 
         The hot side is O(batch), not O(|hot|) (VERDICT r8 #2): the
-        batch's hot rows are APPENDED as one numbered
-        ``hotbatch/batch=<K>`` dir — the existing hot store is neither
+        batch's hot rows are APPENDED as one numbered dir of the hot
+        batch log (``hot_log``) — the existing hot store is neither
         read nor rewritten (the reference's live store appends batches
         and resolves through the cuckoo PK index the same way,
         memstore/live_store.go:33-46) — and readers fold base + pending
@@ -771,189 +710,92 @@ class HotColdStore:
             # missing-event-time records in the live store, keyed by
             # arrival time (ingestion.go:230-235)
             hot_part = observed.filter((t >= cut) | t.isNull())
-            # intra-batch arrival order, persisted so readers resolve
-            # repeated PKs exactly as the eager merge would (caller seq
-            # column, else the batch's current row order — the redo-log
-            # replay order, same rule as collapse_batch)
-            seq_expr = F.col(seq_col).cast("long") if seq_col \
-                else F.monotonically_increasing_id()
-            # absent non-PK columns materialize as NULL — precisely the
-            # per-mode semantics apply_upsert_batch gives a column the
-            # batch doesn't carry (overwrite/add/min/max: keep; force:
-            # null out)
-            stored = hot_part.select(
-                *[(F.col(f.name) if f.name in batch.columns
-                   else F.lit(None)).cast(f.dataType).alias(f.name)
-                  for f in schema.fields],
-                seq_expr.alias("__seq"))
-            n = int(st.get("hot_seq", -1)) + 1 if st else 0
-            hot_dir = self._hot_batch_dir(n)
-            # bound the batch dir's file count (see hot_batch_max_files)
-            # — coalesce is narrow, so this stays the one write job
-            src_parts = batch.rdd.getNumPartitions()
-            if src_parts > self.hot_batch_max_files:
-                stored = stored.coalesce(self.hot_batch_max_files)
-            # "overwrite": an uncommitted dir at this number is an
-            # orphan of a writer that died before its commit — invisible
-            # to every reader, safe to reclaim
-            stored.write.mode("overwrite").parquet(hot_dir)
+
+            def stored(part: DataFrame) -> DataFrame:
+                # the store's columns + the persisted intra-batch
+                # arrival order (readers resolve repeated PKs exactly as
+                # the eager merge would). Absent non-PK columns
+                # materialize as NULL — precisely the per-mode semantics
+                # apply_upsert_batch gives a column the batch doesn't
+                # carry (overwrite/add/min/max: keep; force: null out)
+                return part.select(
+                    *[(F.col(f.name) if f.name in batch.columns
+                       else F.lit(None)).cast(f.dataType).alias(f.name)
+                      for f in schema.fields],
+                    arrival_seq(seq_col))
+
+            log = self.hot_log
+            n = log.write(stored(hot_part), st)
             m = obs.get
             if m["n_null"] and not self.allow_missing_event_time:
                 # reference rejects the whole batch on the first NULL
                 # event time (ingestion.go:228-230); nothing was
                 # committed, so the written dir is an orphan — reclaim
-                pointer.gc_dir(hot_dir)
+                pointer.gc_dir(log.dir(n))
                 raise MissingEventTimeError(
                     f"event time ({self.time_column}) is null for "
                     f"{m['n_null']} row(s) and the table does not allow "
                     f"missing event time (allowMissingEventTime)")
 
-            before = self._state()
             commit: dict = {}
+            displaced: list[str] = []
             if m["n_hot"]:
-                entry = {"n": n}
-                if override:
-                    entry["modes"] = {
-                        c: UpdateMode(v).value for c, v in modes.items()}
-                commit["hot_seq"] = n
-                commit["hot_batches"] = \
-                    self._pending_hot_batches(before) + [entry]
+                commit.update(log.append(st, n, {"modes": {
+                    c: UpdateMode(v).value for c, v in modes.items()}}
+                    if override else None))
             else:  # nothing routed hot: the empty dir is reclaimable
-                pointer.gc_dir(hot_dir)
+                pointer.gc_dir(log.dir(n))
             if m["n_cold"]:
-                cold_part = batch.filter(t < cut)
+                cold_part = stored(batch.filter(t < cut))
                 # a per-batch mode OVERRIDE cannot defer: the queue
                 # replays under the table's modes at flush (the
                 # reference's backfill merge likewise applies table
                 # semantics, memstore/backfill.go) — take the eager
                 # path so the override's exact semantics hold
                 if defer_backfill and not override:
-                    # ledger the committed queue BEFORE the new write
-                    # (legacy pre-ledger dirs adopt into the ledger
-                    # here), then append the new number: visibility
-                    # flips with THIS batch's one pointer commit —
-                    # never by mere directory presence (ADVICE r11 #1)
-                    prev = [int(x.split("=")[1])
-                            for x in self.queued_backfill_batches()]
-                    qn = self._enqueue_backfill(cold_part, seq_col)
-                    commit["backfill_batches"] = prev + [qn]
+                    # visibility flips with THIS batch's one pointer
+                    # commit — never by mere directory presence (ADVICE
+                    # r11 #1): a crash before it leaves an invisible
+                    # orphan, not a torn batch whose cold half flushes
+                    # while its hot half was never committed
+                    q = self.backfill_log
+                    commit.update(q.append(st, q.write(cold_part, st)))
                 else:
-                    updates, cold_displaced = self._cold_upsert(
-                        spark, before, [cold_part], modes, seq_col)
+                    updates, displaced = self._cold_upsert(
+                        spark, st, cold_part.withColumn(
+                            BATCH_COL, F.lit(0).cast("long")), modes)
                     commit.update(updates)
-                    commit.setdefault("__displaced", []).extend(
-                        cold_displaced)
             if commit:
-                displaced = commit.pop("__displaced", [])
-                if "hot" in commit:
-                    displaced.append(self._displaced_dir("hot", before))
                 self._commit(**commit,
-                             displaced=pointer.displace(before, displaced))
+                             displaced=pointer.displace(st, displaced))
                 pointer.gc_displaced(self.path)
 
     # -- backfill queue (BackfillManager buffer, backfill_manager.go) ---------
 
-    def _enqueue_backfill(self, batch: DataFrame,
-                          seq_col: str | None = None) -> int:
-        """Append one pre-cutoff batch to the queue under a monotonically
-        numbered subdir — arrival order IS replay order, like the redo-log
-        offsets the reference's backfill buffer keys on
-        (backfill_manager.go:84-120). INTRA-batch arrival order is
-        PERSISTED as ``__seq`` at write time (the caller's seq column,
-        else the batch's current row order) — exactly like the hot
-        append (``ingest``). Without it, a multi-file queue dir would
-        replay in parquet READ-BACK order (Spark packs multi-file scans
-        largest-file-first), so a batch carrying two updates to one PK
-        could resolve in REVERSE arrival order — a wrong answer the
-        reference avoids by keying its backfill buffer on redo-log
-        offsets (VERDICT r9 #1, hypothesis-shrunk counterexample).
-        Numbering starts above BOTH the highest dir on disk (committed
-        or orphaned) and the consumed watermark, so a number is never
-        reused (a reused number would hide the new batch behind the
-        watermark, or collide with a crash orphan).
-
-        WRITES ONLY — returns the batch number for the CALLER's pointer
-        commit (ADVICE r11 #1): queue visibility is gated on the
-        ``backfill_batches`` ledger committed WITH the rest of the
-        batch's mutation (the hot append), so a crash between this
-        write and the commit leaves an invisible orphan instead of a
-        torn batch whose cold half flushes while its hot half was
-        never committed (and whose streaming replay would re-enqueue
-        the same cold rows — double-counting add-mode columns)."""
-        os.makedirs(self.backfill_path, exist_ok=True)
-        st = self._state() or {}
-        floor = int(st.get("backfill_consumed", -1))
-        nxt = 1 + max((int(n.split("=")[1])
-                       for n in os.listdir(self.backfill_path)
-                       if n.startswith("batch=")), default=floor)
-        nxt = max(nxt, floor + 1)
-        seq_expr = F.col(seq_col).cast("long") if seq_col \
-            else F.monotonically_increasing_id()
-        batch.withColumn("__seq", seq_expr) \
-            .write.mode("errorifexists").parquet(
-                os.path.join(self.backfill_path, f"batch={nxt}"))
-        return nxt
-
-    def _read_queue_batch(self, spark: SparkSession, schema,
-                          name: str) -> DataFrame:
-        """One queued batch with its persisted ``__seq`` arrival order.
-        A legacy dir written before ``__seq`` was persisted (pre-r10
-        crash survivor) gets read-order stamping — the best available
-        for a batch whose order was never recorded."""
-        from pyspark.sql.types import LongType, StructField, StructType
-        d = os.path.join(self.backfill_path, name)
-        has_seq = _dir_has_column(d, "__seq")   # footer read, no job
-        qschema = StructType(
-            list(schema.fields) + [StructField("__seq", LongType())])
-        df = spark.read.schema(qschema).parquet(d)
-        if not has_seq:
-            df = df.withColumn("__seq", F.monotonically_increasing_id())
-        return df
-
     def queued_backfill_batches(self) -> list[str]:
-        """Queue entries not yet folded into cold: the COMMITTED
-        ``backfill_batches`` ledger above the ``backfill_consumed``
-        watermark (ADVICE r11 #1) — a dir whose enqueue commit never
-        landed (crash between queue write and pointer commit) is
-        invisible, exactly like an uncommitted hot batch dir, so a
-        streaming replay of the torn micro-batch is clean instead of
-        double-counting its cold rows at flush. A consumed dir whose
-        best-effort delete failed is likewise invisible — committed
-        state, not the directory listing, is the source of truth.
-        Stores whose state predates the ledger (no ``backfill_batches``
-        key ever committed) fall back to the pre-r11 listing rule and
-        adopt into the ledger on their next deferred ingest."""
-        if not os.path.isdir(self.backfill_path):
-            return []
-        st = self._state() or {}
-        consumed = int(st.get("backfill_consumed", -1))
-        if "backfill_batches" in st:
-            nums = sorted(n for n in set(st["backfill_batches"])
-                          if n > consumed)
-            return [f"batch={n}" for n in nums]
-        return sorted((n for n in os.listdir(self.backfill_path)
-                       if n.startswith("batch=")
-                       and int(n.split("=")[1]) > consumed),
-                      key=lambda n: int(n.split("=")[1]))
+        """Queue entries not yet folded into cold (``batch=<N>`` names,
+        arrival order) — the committed ledger above the consumed
+        watermark (batchlog visibility rule)."""
+        return self.backfill_log.names(self._state())
 
     def backfill_buffer_bytes(self) -> int:
-        """On-disk size of the queued backfill batches — the scheduler's
-        size-based trigger reads this the way the reference reads
-        ``CurrentBufferSize`` (backfill_manager.go:177-181)."""
-        total = 0
-        for name in self.queued_backfill_batches():
-            d = os.path.join(self.backfill_path, name)
-            total += sum(e.stat().st_size for e in os.scandir(d)
-                         if e.is_file())
-        return total
+        """Parquet bytes of the queued backfill batches — the
+        scheduler's size-based trigger reads this the way the reference
+        reads ``CurrentBufferSize`` (backfill_manager.go:177-181)."""
+        return self.backfill_log.size(self._state())[1]
 
     def _cold_upsert(self, spark: SparkSession, st: "dict | None",
-                     batches: list[DataFrame],
-                     modes: "dict | None",
-                     seq_col: "str | None") -> tuple[dict, list[str]]:
-        """Fold upsert batches into the cold store, rewriting ONLY the
-        affected day dirs (never O(|cold|)). Returns (state updates,
-        displaced dirs) for the caller's single commit.
+                     batch: DataFrame,
+                     modes: "dict | None") -> tuple[dict, list[str]]:
+        """Fold upserts into the cold store, rewriting ONLY the affected
+        day dirs (never O(|cold|)). Returns (state updates, displaced
+        dirs) for the caller's single commit.
+
+        ``batch`` is ONE frame in the store's columns plus arrival order
+        ``(BATCH_COL, __seq)`` — every queued batch from one scan on a
+        flush, or the single eager batch — and resolves against the
+        affected cold rows in ONE fold aggregation (``fold_upserts``),
+        however many batches it holds.
 
         Affected days = days the batch rows land in ∪ days holding the
         EXISTING cold copy of a batch PK (an update may move a row
@@ -971,10 +813,6 @@ class HotColdStore:
         Legacy monolithic stores convert here: affected = all days (one
         full rewrite — the cost every flush already paid pre-r9)."""
         pk = list(self.primary_key)
-        t = F.col(self.time_column)
-        union_b = batches[0]
-        for b in batches[1:]:
-            union_b = union_b.unionByName(b, allowMissingColumns=True)
         old_map = self._cold_day_map(st)
         displaced: list[str] = []
         if old_map is None:
@@ -987,7 +825,7 @@ class HotColdStore:
             # PK bounds (was two collects); the bounds drive footer-
             # stats day pruning so the moved-day probe scans only
             # candidate days, not O(|cold|) per flush (ADVICE r10 #3)
-            brow = union_b.agg(
+            brow = batch.agg(
                 F.collect_set(self._day_key()).alias("days"),
                 F.min(F.col(pk[0])).alias("lo"),
                 F.max(F.col(pk[0])).alias("hi"),
@@ -999,7 +837,7 @@ class HotColdStore:
                 (st or {}).get("cold_day_stats", {}))
             moved: set[str] = set()
             if cand:
-                probe = union_b.select(*pk).distinct()
+                probe = batch.select(*pk).distinct()
                 cond = None
                 for k in pk:  # null-safe: a NULL PK is a legal key
                     c = F.col(f"c.{k}").eqNullSafe(F.col(f"p.{k}"))
@@ -1014,10 +852,9 @@ class HotColdStore:
             base = self._read_cold_resolved(spark, st, days=affected)
             displaced += [rel for d in sorted(affected)
                           for rel in old_map.get(d, [])]
-        for b in batches:
-            base = apply_upsert_batch(base, b, pk, modes, seq_col)
         ck = pointer.next_version(st, "coldset_seq")
-        written = self._write_cold_days(self._conform(base, st), ck)
+        written = self._write_cold_days(
+            self._conform(fold_upserts(base, batch, pk, modes), st), ck)
         new_map = {d: dirs for d, dirs in old_map.items()
                    if affected is not None and d not in affected}
         for d, rel in written.items():
@@ -1074,18 +911,20 @@ class HotColdStore:
                        modes: "dict | None" = None) -> int:
         """The backfill job (memstore/backfill.go): fold every queued
         batch into the cold store IN ARRIVAL ORDER under the table's
-        update modes, then drop the queue. One merge per flush, no
-        matter how many batches queued, REWRITING ONLY THE AFFECTED DAY
-        DIRS (``_cold_upsert``) — at 100 TB a backfill flush must not
-        rewrite the archive. Returns the number of batches flushed.
+        update modes, then drop the queue. Returns the number of batches
+        flushed.
 
-        Intra-batch arrival order comes from the ``__seq`` column
-        ``_enqueue_backfill`` persists at write time — replay never
-        trusts parquet read-back order (largest-file-first, NOT write
-        order). Queue dirs written by pre-r10 code lack the column;
-        those fall back to read order per dir (best effort for crash
-        survivors — the old, order-losing behavior they were written
-        under).
+        One merge per flush, no matter how many batches queued: every
+        queued dir is read through ONE parquet scan (``BatchLog.scan``)
+        and resolved in ONE fold aggregation (``_cold_upsert``), with no
+        per-batch join, REWRITING ONLY THE AFFECTED DAY DIRS — at 100 TB
+        a backfill flush must not rewrite the archive. Arrival order is
+        each file's ``batch=<N>`` dir, then the ``__seq`` persisted at
+        enqueue — replay never trusts parquet read-back order
+        (largest-file-first, NOT write order). Queue dirs written by
+        pre-r10 code lack ``__seq``; those fall back to read order (best
+        effort for crash survivors — the old, order-losing behavior they
+        were written under).
 
         The day-map update and the queue truncation (the consumed
         watermark) commit in ONE pointer write: a crash anywhere
@@ -1094,31 +933,19 @@ class HotColdStore:
         day dirs are ledgered with the commit (read-grace) and reaped
         by gc; a queue survivor stays invisible behind the watermark."""
         with _single_writer(self.path), _utc_session(spark):
-            names = self.queued_backfill_batches()
-            if not names:
+            st = self._state()
+            log = self.backfill_log
+            queued = log.scan(spark, self._schema(st), st)
+            if queued is None:
                 return 0
-            modes = self.modes if modes is None else modes
-            before = self._state()
-            schema = self._schema(before)
-            batches = [self._read_queue_batch(spark, schema, name)
-                       for name in names]
             updates, displaced = self._cold_upsert(
-                spark, before, batches, modes, "__seq")
-            consumed = int(names[-1].split("=")[1])
-            # ledger EVERYTHING at/below the watermark, not just this
-            # flush's names — survivors of a crash between an earlier
-            # commit and its reap are invisible (watermark) but would
-            # otherwise leak storage forever
-            queue_dirs = [f"backfill/{n}"
-                          for n in os.listdir(self.backfill_path)
-                          if n.startswith("batch=")
-                          and int(n.split("=")[1]) <= consumed]
-            self._commit(**updates, backfill_consumed=consumed,
-                         backfill_batches=[],
+                spark, st, queued, self.modes if modes is None else modes)
+            consumed, queue_dirs = log.consume(st)
+            self._commit(**updates, **consumed,
                          displaced=pointer.displace(
-                             before, displaced + queue_dirs))
+                             st, displaced + queue_dirs))
             pointer.gc_displaced(self.path)
-            return len(names)
+            return len(log.pending(st))
 
     def _conform(self, df: DataFrame,
                  st: "dict | None | str" = "__load__") -> DataFrame:
@@ -1165,7 +992,7 @@ class HotColdStore:
         with _single_writer(self.path), _utc_session(spark):
             cut = F.lit(_utc_naive(new_cutoff))
             before = self._state()
-            pending = self._pending_hot_batches(before)
+            pending = self.hot_log.pending(before)
             # the resolved view feeds the cutoff gate AND up to two
             # writes (cold days + the new hot base) — without a persist
             # the pending-PK resolve re-executes per action (measured:
@@ -1216,17 +1043,15 @@ class HotColdStore:
                     # memstore/archiving.go:62-72)
                     commit["hot"] = self._next("hot")
                     self._write_hot(stay_hot, commit["hot"])
-                displaced = displaced_cold + \
-                    [self._displaced_dir("hot", before)
-                     if "hot" in commit else None]
-                displaced = [d for d in displaced if d is not None]
+                displaced = displaced_cold
                 if "hot" in commit:
-                    # consumed by the compaction; survive in the ledger
-                    # for the read-grace window like every displaced
-                    # artifact
-                    commit["hot_batches"] = []
-                    displaced += [f"hotbatch/batch={e['n']}"
-                                  for e in pending]
+                    # the pending batches are consumed by the compaction;
+                    # they survive in the ledger for the read-grace
+                    # window like every displaced artifact
+                    consumed, batch_dirs = self.hot_log.consume(before)
+                    commit.update(consumed)
+                    displaced += [self._displaced_dir("hot", before)] + \
+                        batch_dirs
                 self._commit(**commit,
                              displaced=pointer.displace(before, displaced))
                 pointer.gc_displaced(self.path)
@@ -1240,15 +1065,14 @@ class HotColdStore:
         cadence). Returns the number of batch dirs compacted."""
         with _single_writer(self.path):
             before = self._state()
-            pending = self._pending_hot_batches(before)
+            pending = self.hot_log.pending(before)
             if not pending:
                 return 0
             nxt = self._next("hot")
             self._write_hot(self._read_hot_resolved(spark, before), nxt)
-            displaced = [self._displaced_dir("hot", before)] + \
-                [f"hotbatch/batch={e['n']}" for e in pending]
-            self._commit(hot=nxt, hot_batches=[],
-                         displaced=pointer.displace(before, displaced))
+            consumed, batch_dirs = self.hot_log.consume(before)
+            self._commit(hot=nxt, **consumed, displaced=pointer.displace(
+                before, [self._displaced_dir("hot", before)] + batch_dirs))
             pointer.gc_displaced(self.path)
             return len(pending)
 
@@ -1260,8 +1084,8 @@ class HotColdStore:
         reference's live-store row stats count pre-merge records the
         same way)."""
         st = self._state()
-        return self._dir_rows(self._version_path("hot", st)) + \
-            self._pending_rows(self._pending_hot_batches(st))
+        return footer_size([self._version_path("hot", st)])[0] + \
+            self.hot_log.size(st)[0]
 
     def compact_cold_days(self, spark: SparkSession,
                           days: "list[str] | None" = None,
@@ -1354,10 +1178,11 @@ class DimensionStore:
 
     def init_from(self, df: DataFrame) -> None:
         """Fresh-version write + pointer commit (re-init is a versioned
-        mutation like any other; leftover journal dirs stay invisible
-        behind an advanced watermark). The schema file is versioned and
-        referenced by the commit, like the fact store's — never an
-        in-place overwrite. Single-writer like every other mutation."""
+        mutation like any other; the same commit consumes the journal,
+        so stale batches never replay over the new snapshot). The schema
+        file is versioned and referenced by the commit, like the fact
+        store's — never an in-place overwrite. Single-writer like every
+        other mutation."""
         with _single_writer(self.path):
             before = pointer.read_state(self.path)
             sv = pointer.next_version(before, "schema")
@@ -1367,21 +1192,14 @@ class DimensionStore:
             nxt = pointer.next_version(before, "snap")
             df.write.mode("overwrite").parquet(
                 os.path.join(self.path, f"snap_v{nxt}"))
-            consumed = int((before or {}).get("journal_consumed", -1))
-            if os.path.isdir(self.journal_path):
-                consumed = max([consumed] + [
-                    int(n.split("=")[1])
-                    for n in os.listdir(self.journal_path)
-                    if n.startswith("batch=")])
-            displaced = []
+            consumed, displaced = self.journal_log.consume(before)
             if os.path.exists(self._schema_path(before)):  # brand-new: none
                 displaced.append(
                     os.path.basename(self._schema_path(before)))
             if before is not None and "snap" in before:
                 displaced.append(f"snap_v{before['snap']}")
             pointer.commit_state(self.path, {
-                "format": 2, "snap": nxt, "schema": sv,
-                "journal_consumed": consumed,
+                "format": 2, "snap": nxt, "schema": sv, **consumed,
                 "displaced": pointer.displace(before, displaced)})
             pointer.gc_displaced(self.path)
 
@@ -1399,24 +1217,20 @@ class DimensionStore:
             return StructType.fromJson(__import__("json").load(f))
 
     @property
-    def journal_path(self) -> str:
-        return os.path.join(self.path, "journal")
+    def journal_log(self) -> BatchLog:
+        """The mutation journal (``journal/``) the snapshot job
+        compacts — the reference's dimension redo log."""
+        return BatchLog(self.path, "journal", "journal_batches",
+                        "journal_seq", "journal_consumed")
 
-    def _journal_batches(self,
-                         st: "dict | None | str" = "__load__") -> list[str]:
-        """Journal entries not yet folded into a snapshot (above the
-        committed watermark; a consumed dir whose best-effort delete
-        failed stays invisible behind it). Pass ``st`` to list against
-        an already-read state snapshot."""
-        if not os.path.isdir(self.journal_path):
-            return []
-        if st == "__load__":
-            st = self._state()
-        consumed = int((st or {}).get("journal_consumed", -1))
-        return sorted((n for n in os.listdir(self.journal_path)
-                       if n.startswith("batch=")
-                       and int(n.split("=")[1]) > consumed),
-                      key=lambda n: int(n.split("=")[1]))
+    @property
+    def journal_path(self) -> str:
+        return self.journal_log.path
+
+    def _journal_batches(self) -> list[str]:
+        """Journal entries not yet folded into a snapshot (``batch=<N>``
+        names, arrival order)."""
+        return self.journal_log.names(self._state())
 
     def _snap_dir(self, st: "dict | None | str" = "__load__") -> str:
         if st == "__load__":
@@ -1440,35 +1254,27 @@ class DimensionStore:
         with _single_writer(self.path):
             return pointer.gc_displaced(self.path, grace_seconds)
 
-    def _publish_snap(self, spark: SparkSession, merged: DataFrame,
-                      consumed_names: list[str]) -> None:
+    def _publish_snap(self, merged: DataFrame,
+                      st_before: "dict | None") -> None:
         """Write the new snapshot version, then commit the snap flip,
         the journal watermark AND the displaced-artifact ledger in ONE
         pointer write (the reference's snapshot pointer,
         diskstore_util.go:66-70) — a crash mid-way leaves the old
-        snapshot + full journal live. Displaced artifacts are NOT
-        deleted at the flip: a reader mid-replay on the old snapshot +
-        journal finishes over intact files; ``gc`` reaps after the
+        snapshot + full journal live. ``merged`` must already fold every
+        journal batch pending in ``st_before``. Displaced artifacts are
+        NOT deleted at the flip: a reader mid-replay on the old snapshot
+        + journal finishes over intact files; ``gc`` reaps after the
         grace window. The ledger covers EVERYTHING at/below the
         watermark, so crash survivors of an earlier commit-then-die
         (invisible behind the watermark) self-heal instead of leaking."""
-        st_before = self._state()
         nxt = pointer.next_version(st_before, "snap")
         merged.write.mode("overwrite").parquet(
             os.path.join(self.path, f"snap_v{nxt}"))
-        consumed = int(consumed_names[-1].split("=")[1]) \
-            if consumed_names else int(
-                (st_before or {}).get("journal_consumed", -1))
+        consumed, journal_dirs = self.journal_log.consume(st_before)
         displaced = ["snap" if st_before is None or "snap" not in st_before
-                     else f"snap_v{st_before['snap']}"]
-        if os.path.isdir(self.journal_path):
-            displaced += [f"journal/{n}"
-                          for n in os.listdir(self.journal_path)
-                          if n.startswith("batch=")
-                          and int(n.split("=")[1]) <= consumed]
+                     else f"snap_v{st_before['snap']}"] + journal_dirs
         pointer.commit_state(self.path, {
-            **(st_before or {"format": 2}),
-            "snap": nxt, "journal_consumed": consumed,
+            **(st_before or {"format": 2}), "snap": nxt, **consumed,
             "displaced": pointer.displace(st_before, displaced)})
         pointer.gc_displaced(self.path)
 
@@ -1486,25 +1292,21 @@ class DimensionStore:
 
     def _replay(self, spark: SparkSession, st: "dict | None",
                 base: DataFrame) -> DataFrame:
-        """Resolve snapshot + pending journal batches to current state
-        in ONE fold aggregation (streaming/upsert.fold_upserts — the
-        same read-side resolution as the fact store's hot batches, and
-        hypothesis-proved equal to the per-batch merge chain), instead
-        of one full-outer join per journal batch: plan depth and
-        shuffle count stay constant however many mutations queued
-        before the snapshot job's threshold. Journal replay always uses
-        the STORE's modes (per-batch overrides take the eager
-        ``ingest``), so the one-pass fold is always applicable."""
-        from aresdb_spark.streaming.upsert import fold_upserts, tag_batches
-
-        names = self._journal_batches(st)
-        if not names:
-            return base
+        """Resolve snapshot + pending journal batches to current state:
+        ONE scan over the pending journal dirs (``BatchLog.scan``) and
+        ONE fold aggregation (streaming/upsert.fold_upserts — the same
+        read-side resolution as the fact store's hot batches, and
+        hypothesis-proved equal to the per-batch merge chain): plan
+        depth and shuffle count stay constant however many mutations
+        queued before the snapshot job's threshold. Journal replay
+        always uses the STORE's modes (per-batch overrides take the
+        eager ``ingest``), so the one-pass fold is always applicable."""
         sch = self._schema(st)
-        batches = [self._read_journal_batch(spark, sch, name)
-                   for name in names]
-        folded = fold_upserts(base, tag_batches(batches),
-                              list(self.primary_key), self.modes)
+        journal = self.journal_log.scan(spark, sch, st)
+        if journal is None:
+            return base
+        folded = fold_upserts(base, journal, list(self.primary_key),
+                              self.modes)
         # conform: fold aggregates can widen dtypes (sum-based add)
         return folded.select(
             [F.col(f.name).cast(f.dataType) for f in sch.fields])
@@ -1515,13 +1317,14 @@ class DimensionStore:
         # single-writer like the fact store: ingest is a full snapshot
         # rewrite, so a concurrent writer would drop a batch silently
         with _single_writer(self.path):
-            names = self._journal_batches()
+            st = self._state()
             merged = apply_upsert_batch(
-                self.read(spark), batch, list(self.primary_key),
+                self._replay(spark, st, self._read_snap(spark, st)), batch,
+                list(self.primary_key),
                 self.modes if modes is None else modes, seq_col)
             merged = merged.select(
-                [F.col(f.name).cast(f.dataType) for f in self._schema()])
-            self._publish_snap(spark, merged, names)
+                [F.col(f.name).cast(f.dataType) for f in self._schema(st)])
+            self._publish_snap(merged, st)
 
     # -- mutation journal (redo-log analog feeding the snapshot job) ----------
 
@@ -1540,49 +1343,22 @@ class DimensionStore:
         — replay must not re-derive order from parquet read-back
         (largest-file-first), or a batch with two updates to one PK
         resolves in reverse (same defect class as the backfill queue,
-        VERDICT r9 #2; the reference's redo log carries offsets).
-        Numbering starts above both the highest dir on disk and the
-        consumed watermark (a reused number would hide behind it)."""
+        VERDICT r9 #2; the reference's redo log carries offsets). The
+        batch becomes visible only with the pointer commit that ledgers
+        it: a writer killed before that commit leaves an invisible
+        orphan, so replaying the same batch applies it exactly once."""
         with _single_writer(self.path):
-            os.makedirs(self.journal_path, exist_ok=True)
-            st = self._state() or {}
-            floor = int(st.get("journal_consumed", -1))
-            nxt = 1 + max((int(n.split("=")[1])
-                           for n in os.listdir(self.journal_path)
-                           if n.startswith("batch=")), default=floor)
-            nxt = max(nxt, floor + 1)
-            seq_expr = F.col(seq_col).cast("long") if seq_col \
-                else F.monotonically_increasing_id()
-            batch.withColumn("__seq", seq_expr) \
-                .write.mode("errorifexists").parquet(
-                    os.path.join(self.journal_path, f"batch={nxt}"))
-
-    def _read_journal_batch(self, spark: SparkSession, sch,
-                            name: str) -> DataFrame:
-        """One journal batch with its persisted ``__seq`` arrival order;
-        legacy dirs (pre-r10) fall back to read-order stamping."""
-        from pyspark.sql.types import LongType, StructField, StructType
-        d = os.path.join(self.journal_path, name)
-        has_seq = _dir_has_column(d, "__seq")   # footer read, no job
-        jschema = StructType(
-            list(sch.fields) + [StructField("__seq", LongType())])
-        df = spark.read.schema(jschema).parquet(d)
-        if not has_seq:
-            df = df.withColumn("__seq", F.monotonically_increasing_id())
-        return df
+            st = self._state()
+            log = self.journal_log
+            n = log.write(batch.withColumn(SEQ_COL, arrival_seq(seq_col)), st)
+            pointer.commit_state(self.path, {**(st or {"format": 2}),
+                                             **log.append(st, n)})
 
     def num_mutations(self) -> int:
         """Journaled mutation count since the last snapshot — what the
         reference's SnapshotManager tracks as ``NumMutations``
         (snapshot_manager.go:40-46): row count, not byte size."""
-        import pyarrow.parquet as pq
-        total = 0
-        for name in self._journal_batches():
-            d = os.path.join(self.journal_path, name)
-            for e in os.scandir(d):
-                if e.name.endswith(".parquet"):
-                    total += pq.ParquetFile(e.path).metadata.num_rows
-        return total
+        return self.journal_log.size(self._state())[0]
 
     def snapshot(self, spark: SparkSession) -> int:
         """The snapshot job (memstore/snapshot.go): persist current state
@@ -1590,10 +1366,9 @@ class DimensionStore:
         journal. Returns the number of mutations compacted."""
         with _single_writer(self.path):
             st = self._state()
-            names = self._journal_batches(st)
-            if not names:
+            if not self.journal_log.pending(st):
                 return 0
-            compacted = self.num_mutations()
-            base = self._replay(spark, st, self._read_snap(spark, st))
-            self._publish_snap(spark, base, names)
+            compacted = self.journal_log.size(st)[0]
+            self._publish_snap(
+                self._replay(spark, st, self._read_snap(spark, st)), st)
             return compacted

@@ -109,17 +109,17 @@ class DebugDaemon:
             # live batch list the same way, debug_handler.go
             # ShowShardMeta -> LiveStore.Batches)
             meta["hot_pending_batches"] = \
-                len(store._pending_hot_batches())
+                len(store.hot_log.pending(state))
             # committed day keys straight from the pointer (metadata;
             # dir listing only for legacy monolithic stores)
             meta["cold_days"] = store.cold_day_keys()
             meta["backfill_queue"] = {
-                "batches": len(store.queued_backfill_batches()),
-                "bytes": store.backfill_buffer_bytes()}
+                "batches": len(store.backfill_log.pending(state)),
+                "bytes": store.backfill_log.size(state)[1]}
         else:  # dimension store
             meta["kind"] = "dimension"
-            meta["journal_batches"] = len(store._journal_batches())
-            meta["num_mutations"] = store.num_mutations()
+            meta["journal_batches"] = len(store.journal_log.pending(state))
+            meta["num_mutations"] = store.journal_log.size(state)[0]
         return 200, meta
 
     def show_batch(self, table: str, shard: int = 0, batch: str = "hot",

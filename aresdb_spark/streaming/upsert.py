@@ -133,21 +133,6 @@ def apply_upsert_batch(base: DataFrame, batch: DataFrame, pk_cols: list[str],
 BATCH_COL = "__batch"
 
 
-def tag_batches(batches: list[DataFrame]) -> DataFrame:
-    """One frame holding an arrival-ordered list of upsert batches, each
-    row tagged with its batch's list position in ``BATCH_COL`` — the
-    input shape ``fold_upserts`` takes. For callers that hold batches as
-    separate frames (journal replay, tests); a store that can read every
-    pending batch in one scan derives the order column from the scan
-    instead."""
-    tagged = [b.withColumn(BATCH_COL, F.lit(i))
-              for i, b in enumerate(batches)]
-    out = tagged[0]
-    for b in tagged[1:]:
-        out = out.unionByName(b)
-    return out
-
-
 def fold_upserts(base: DataFrame, batches: DataFrame, pk_cols: list[str],
                  modes: dict[str, UpdateMode | str] | None = None,
                  seq_col: str = "__seq") -> DataFrame:
@@ -157,11 +142,12 @@ def fold_upserts(base: DataFrame, batches: DataFrame, pk_cols: list[str],
     index at read, memstore/live_store.go:33-46; here the bounded hot
     set folds in one hash shuffle instead).
 
-    ``batches`` is ONE frame holding every pending batch's rows. Arrival
-    order is ``(BATCH_COL, seq_col)``: ``BATCH_COL`` (a non-negative
-    integer) orders the batches, ``seq_col`` (long, intra-batch arrival
-    order materialized at ingest write time) orders rows within one.
-    ``tag_batches`` builds that frame from a list. Equivalent to
+    ``batches`` is ONE frame holding every pending batch's rows — a
+    batch log's one-scan read (sources/batchlog.py) or a single eager
+    batch. Arrival order is ``(BATCH_COL, seq_col)``: ``BATCH_COL`` (a
+    non-negative integer) orders the batches, ``seq_col`` (long,
+    intra-batch arrival order materialized at write time) orders rows
+    within one. Equivalent to
     chaining ``apply_upsert_batch`` per batch in ``BATCH_COL`` order
     because every mode's merge is associative over arrival order:
 

@@ -8,6 +8,7 @@ from datetime import datetime
 import pytest
 from pyspark.sql import Row
 
+from aresdb_spark.sources import hotcold
 from aresdb_spark.sources.hotcold import HotColdStore
 from aresdb_spark.streaming.upsert import apply_upsert_batch
 
@@ -21,9 +22,9 @@ def _rows(spec, hour):
             for i, v, n in spec]
 
 
-def _store(spark, root, **kw):
+def _store(spark, root):
     store = HotColdStore(path=str(root), time_column="ts",
-                         primary_key=("id",), modes=MODES, **kw)
+                         primary_key=("id",), modes=MODES)
     store.init_from(spark.createDataFrame(
         _rows([(i, 0.0, 1) for i in range(20)], 0)), CUTOFF)
     return store
@@ -95,10 +96,11 @@ def test_mode_override_batch_mixed_into_the_scan(spark, tmp_path):
     assert got == want
 
 
-def test_whole_base_fold_reads_the_one_scan(spark, tmp_path):
-    """``hot_probe_max_rows=0`` skips the pending-PK probe and folds the
-    whole base against the same scan, in numeric batch order."""
-    store = _store(spark, tmp_path / "t", hot_probe_max_rows=0)
+def test_whole_base_fold_reads_the_one_scan(spark, tmp_path, monkeypatch):
+    """``HOT_PROBE_MAX_ROWS = 0`` skips the pending-PK probe and folds
+    the whole base against the same scan, in numeric batch order."""
+    monkeypatch.setattr(hotcold, "HOT_PROBE_MAX_ROWS", 0)
+    store = _store(spark, tmp_path / "t")
     want = _pending_from(spark, store, 9, NINE_TEN)
     got = _hot(spark, store)
     assert got[1] == (10.0, 3)
@@ -123,8 +125,10 @@ def _file_relations(df, marker):
 
 
 @pytest.mark.parametrize("probe_max", [1_000_000, 0])
-def test_pending_batches_plan_one_relation(spark, tmp_path, probe_max):
-    store = _store(spark, tmp_path / "t", hot_probe_max_rows=probe_max)
+def test_pending_batches_plan_one_relation(spark, tmp_path, probe_max,
+                                           monkeypatch):
+    monkeypatch.setattr(hotcold, "HOT_PROBE_MAX_ROWS", probe_max)
+    store = _store(spark, tmp_path / "t")
     k = 4
     for b in range(k):
         store.ingest(spark, spark.createDataFrame(
@@ -164,3 +168,74 @@ def test_pruned_cold_side_plans_no_python_rdd(spark, tmp_path):
         plan = executed_plan_str(df)
         assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
         assert sorted(r["id"] for r in df.collect()) == [0, 1, 2]
+
+
+def _plan_nodes(df, name):
+    """Optimized-plan lines whose node is ``name``."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in plan.splitlines()
+            if ln.lstrip(" :+-").split(" ", 1)[0] == name]
+
+
+def test_backfill_flush_plans_one_scan_and_one_fold(
+        spark, tmp_path, monkeypatch):
+    """``flush_backfill`` over k >= 3 queued batches rewrites cold from
+    ONE parquet relation over every ``backfill/`` dir and ONE fold
+    aggregate — no per-batch full-outer join — in numeric batch order."""
+    store = _store(spark, tmp_path / "t")
+    k = 3
+    for b in range(k):
+        store.ingest(spark, spark.createDataFrame(
+            [Row(id=50, ts=datetime(2024, 1, 5), v=float(b), n=1),
+             Row(id=60 + b, ts=datetime(2024, 1, 6), v=1.0, n=1)]),
+            CUTOFF, defer_backfill=True)
+    written = []
+    real = HotColdStore._write_cold_days
+
+    def capture(self, df, ck):
+        written.append(df)
+        return real(self, df, ck)
+
+    monkeypatch.setattr(HotColdStore, "_write_cold_days", capture)
+    assert store.flush_backfill(spark) == k
+    (df,) = written
+    rels = _file_relations(df, "backfill")
+    assert len(rels) == 1 and len(rels[0]) == k, rels
+    assert len(_plan_nodes(df, "Aggregate")) == 1
+    assert not [j for j in _plan_nodes(df, "Join") if "FullOuter" in j]
+    got = {r["id"]: (r["v"], r["n"]) for r in store.read_cold(spark).collect()}
+    assert got == {50: (2.0, 3), 60: (1.0, 1), 61: (1.0, 1), 62: (1.0, 1)}
+
+
+def test_every_log_append_caps_its_file_count(spark, tmp_path, monkeypatch):
+    """``batchlog.MAX_FILES`` bounds the files of every appended batch
+    dir — hot batch, backfill queue and dimension journal alike — and
+    the capped dirs read back every row."""
+    import os
+
+    from aresdb_spark.sources import batchlog
+    from aresdb_spark.sources.hotcold import DimensionStore
+
+    monkeypatch.setattr(batchlog, "MAX_FILES", 2)
+    store = _store(spark, tmp_path / "t")
+    rows = [Row(id=100 + i, ts=datetime(2024, 1, 5 + 11 * (i % 2)),
+                v=1.0, n=1) for i in range(40)]
+    store.ingest(spark, spark.createDataFrame(rows).repartition(6),
+                 CUTOFF, defer_backfill=True)
+    dim = DimensionStore(path=str(tmp_path / "d"), primary_key=("k",))
+    dim.init_from(spark.createDataFrame([Row(k=0, name="a")]))
+    dim.journal_ingest(spark.createDataFrame(
+        [Row(k=i, name=str(i)) for i in range(40)]).repartition(6))
+
+    for owner, log, n_rows in ((store, store.hot_log, 20),
+                               (store, store.backfill_log, 20),
+                               (dim, dim.journal_log, 40)):
+        st = owner._state()
+        (e,) = log.pending(st)
+        files = [n for n in os.listdir(log.dir(e["n"]))
+                 if n.endswith(".parquet")]
+        assert 1 <= len(files) <= 2, (log.name, files)
+        assert log.size(st)[0] == n_rows
+    assert store.flush_backfill(spark) == 1
+    assert store.read(spark).count() == 20 + 40
+    assert dim.read(spark).count() == 40

@@ -670,7 +670,7 @@ def test_compact_cold_days_squashes_append_fanin(spark, tmp_path):
     assert store.compact_cold_days(spark) == 0
 
 
-def test_hot_fold_touches_only_pending_pks(spark, tmp_path):
+def test_hot_fold_touches_only_pending_pks(spark, tmp_path, monkeypatch):
     """VERDICT r9 #4 / r10 directive 2: with pending batches, the hot
     read must NOT shuffle the whole base — the pending-PK set broadcasts
     (left_semi/left_anti split), only the matched slice feeds the fold
@@ -680,6 +680,7 @@ def test_hot_fold_touches_only_pending_pks(spark, tmp_path):
     import re
 
     from aresdb_spark.plans.audit import executed_plan_str
+    from aresdb_spark.sources import hotcold
     from aresdb_spark.sources.hotcold import HotColdStore
 
     cutoff = datetime(2024, 1, 15)
@@ -707,9 +708,9 @@ def test_hot_fold_touches_only_pending_pks(spark, tmp_path):
 
     # oversized pending set falls back to the whole-base fold (the
     # broadcast must never OOM a reader) — same values, no joins
+    monkeypatch.setattr(hotcold, "HOT_PROBE_MAX_ROWS", 0)
     small = HotColdStore(path=str(tmp_path / "s"), time_column="ts",
-                         primary_key=("id",), modes={"v": "add"},
-                         hot_probe_max_rows=0)
+                         primary_key=("id",), modes={"v": "add"})
     small.init_from(spark.createDataFrame(
         [Row(id=i, ts=datetime(2024, 1, 16), v=1.0) for i in range(50)]),
         cutoff)

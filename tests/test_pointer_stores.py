@@ -620,40 +620,91 @@ def test_deferred_enqueue_crash_before_commit_is_invisible(spark, tmp_path):
     assert got == {1: 6.0, 2: 2.0, 20: 20.0}
 
 
-def test_backfill_ledger_adopts_legacy_stores(spark, tmp_path):
-    """A store whose committed state predates the backfill_batches
-    ledger (pre-r11) keeps the old listing rule until its next deferred
-    ingest, which adopts the legacy dirs into the ledger — nothing
-    queued under old code is lost."""
+@pytest.mark.parametrize("log", ["queue", "journal"])
+def test_backfill_ledger_adopts_legacy_stores(spark, tmp_path, log):
+    """A store whose committed state predates its log's ledger (a
+    pre-r11 backfill queue; a dimension journal written before journal
+    appends were ledgered) keeps the listing rule — dirs above the
+    watermark — until its next append, which adopts the legacy dirs
+    into the ledger: nothing appended under old code is lost."""
     from datetime import datetime as dt
 
     from aresdb_spark.sources import pointer
-    from aresdb_spark.sources.hotcold import HotColdStore
+    from aresdb_spark.sources.hotcold import DimensionStore, HotColdStore
 
     cutoff = dt(2024, 1, 15)
-    store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
-                         primary_key=("id",), modes={"v": "add"})
-    store.init_from(spark.createDataFrame([
-        Row(id=1, ts=dt(2024, 1, 2, 5), v=1.0),
-        Row(id=2, ts=dt(2024, 1, 20, 5), v=2.0),
-    ]), cutoff)
-    store.ingest(spark, spark.createDataFrame(
-        [Row(id=10, ts=dt(2024, 1, 3, 5), v=10.0)]),
-        cutoff, defer_backfill=True)
+    if log == "queue":
+        store = HotColdStore(path=str(tmp_path / "t"), time_column="ts",
+                             primary_key=("id",), modes={"v": "add"})
+        store.init_from(spark.createDataFrame([
+            Row(id=1, ts=dt(2024, 1, 2, 5), v=1.0),
+            Row(id=2, ts=dt(2024, 1, 20, 5), v=2.0),
+        ]), cutoff)
 
-    # simulate a pre-ledger store: strip the key from committed state
+        def append(i, v):
+            store.ingest(spark, spark.createDataFrame(
+                [Row(id=i, ts=dt(2024, 1, i - 7, 5), v=v)]),
+                cutoff, defer_backfill=True)
+        names, fold = store.queued_backfill_batches, store.flush_backfill
+        blog, read = store.backfill_log, store.read_cold
+    else:
+        store = DimensionStore(path=str(tmp_path / "d"),
+                               primary_key=("id",), modes={"v": "add"})
+        store.init_from(spark.createDataFrame([Row(id=1, v=1.0)]))
+
+        def append(i, v):
+            store.journal_ingest(spark.createDataFrame([Row(id=i, v=v)]))
+        names, fold = store._journal_batches, store.snapshot
+        blog, read = store.journal_log, store.read
+    append(10, 10.0)
+
+    # simulate a pre-ledger store: strip the ledger and its counter
     st = store._state()
-    st.pop("backfill_batches")
+    st.pop(blog.ledger_key)
+    st.pop(blog.seq_key)
     pointer.commit_state(store.path, st)
-    assert store.queued_backfill_batches() == ["batch=0"]  # legacy rule
+    assert names() == ["batch=0"]  # legacy rule
 
-    # next deferred ingest adopts the legacy dir into the ledger
-    store.ingest(spark, spark.createDataFrame(
-        [Row(id=11, ts=dt(2024, 1, 4, 5), v=11.0)]),
-        cutoff, defer_backfill=True)
-    assert store._state()["backfill_batches"] == [0, 1]
-    assert store.queued_backfill_batches() == ["batch=0", "batch=1"]
-    assert store.flush_backfill(spark) == 2
-    assert store._state()["backfill_batches"] == []
-    got = {r.id: r.v for r in store.read_cold(spark).collect()}
+    # next append adopts the legacy dir into the ledger
+    append(11, 11.0)
+    assert store._state()[blog.ledger_key] == [0, 1]
+    assert names() == ["batch=0", "batch=1"]
+    assert fold(spark) == 2
+    assert store._state()[blog.ledger_key] == []
+    got = {r.id: r.v for r in read(spark).collect()}
     assert got == {1: 1.0, 10: 10.0, 11: 11.0}
+
+
+def test_journal_append_crash_before_commit_is_invisible(spark, tmp_path):
+    """A journal append becomes visible with its pointer commit, never
+    by directory presence: a writer killed before the commit leaves an
+    orphan dir that ``read``, ``num_mutations`` and ``snapshot`` all
+    ignore, and replaying the same batch applies it once (add mode
+    would read 10+5+5 on a double count)."""
+    import os
+
+    from aresdb_spark.sources.hotcold import DimensionStore
+
+    dim = DimensionStore(path=str(tmp_path / "d"), primary_key=("k",),
+                         modes={"n": "add"})
+    dim.init_from(spark.createDataFrame([Row(k=1, n=10)]))
+    batch = spark.createDataFrame([Row(k=1, n=5), Row(k=2, n=7)])
+    with _CrashOnCommit():
+        with pytest.raises(RuntimeError, match="pointer flip"):
+            dim.journal_ingest(batch)
+
+    assert any(n.startswith("batch=")
+               for n in os.listdir(dim.journal_path))   # orphan on disk
+    assert dim._journal_batches() == []
+    assert dim.num_mutations() == 0
+    assert {(r.k, r.n) for r in dim.read(spark).collect()} == {(1, 10)}
+    assert dim.snapshot(spark) == 0
+
+    # the replay of the same batch reclaims the orphan's number
+    dim.journal_ingest(batch)
+    assert dim._journal_batches() == ["batch=0"]
+    assert dim.num_mutations() == 2
+    want = {(1, 15), (2, 7)}
+    assert {(r.k, r.n) for r in dim.read(spark).collect()} == want
+    assert dim.snapshot(spark) == 2
+    assert {(r.k, r.n) for r in dim.read(spark).collect()} == want

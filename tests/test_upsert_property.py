@@ -120,7 +120,7 @@ def test_fold_upserts_equals_chained_merges(spark, base, batches,
     eager chain of per-batch merges — i.e. every update mode's merge is
     associative over (batch, seq) arrival order. This is the invariant
     that lets ingest be O(batch) while reads stay exact."""
-    from aresdb_spark.streaming.upsert import fold_upserts, tag_batches
+    from aresdb_spark.streaming.upsert import BATCH_COL, fold_upserts
 
     modes = {"x": mode_x, "y": mode_y}
     base_df = spark.createDataFrame(base or [(99, None, None)],
@@ -136,7 +136,12 @@ def test_fold_upserts_equals_chained_merges(spark, base, batches,
     for bdf in batch_dfs:
         chained = apply_upsert_batch(chained, bdf, ["pk"], modes,
                                      seq_col="__seq")
-    folded = fold_upserts(base_df, tag_batches(batch_dfs), ["pk"], modes)
+    # the same batches as ONE frame, each row tagged with its batch
+    tagged = spark.createDataFrame(
+        [(pk, x, y, i, k) for k, b in enumerate(batches)
+         for i, (pk, x, y) in enumerate(b)],
+        f"pk int, x int, y int, __seq long, {BATCH_COL} long")
+    folded = fold_upserts(base_df, tagged, ["pk"], modes)
     got = {r["pk"]: (r["x"], r["y"]) for r in folded.collect()}
     want = {r["pk"]: (r["x"], r["y"]) for r in chained.collect()}
     assert got == want
